@@ -28,8 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from ..operators.merge import merge_array_accum, upsert_snapshot
+from ..operators.merge import merge_array_accum
 from ..sources.atomic import publish_parquet, read_published
 from .schemas import (
     DOC_TEXT_COLUMNS,
@@ -69,18 +70,18 @@ def read_listings_csv(spark: SparkSession, path: str) -> DataFrame:
         .option("escape", '"')
         .csv(path)
     )
-    return _select_listings(raw)
+    return _select_by_name(raw, LISTINGS_RAW_SCHEMA, "listings")
 
 
-def _select_listings(raw: DataFrame) -> DataFrame:
-    missing = [f.name for f in LISTINGS_RAW_SCHEMA.fields if f.name not in raw.columns]
+def _select_by_name(raw: DataFrame, schema: StructType, what: str) -> DataFrame:
+    """Select ``schema``'s columns from an all-string CSV frame by header
+    name and try_cast each to its canonical type; extra and reordered
+    columns are fine, a missing one is an error."""
+    missing = [f.name for f in schema.fields if f.name not in raw.columns]
     if missing:
-        raise ValueError(f"listings CSV lacks selected columns: {missing}")
+        raise ValueError(f"{what} CSV lacks selected columns: {missing}")
     return raw.select(
-        *[
-            F.col(f.name).try_cast(f.dataType).alias(f.name)
-            for f in LISTINGS_RAW_SCHEMA.fields
-        ]
+        *[F.col(f.name).try_cast(f.dataType).alias(f.name) for f in schema.fields]
     )
 
 
@@ -101,7 +102,7 @@ def read_listings_csv_splittable(
     raw = rechunk_multiline_csv(
         spark, path, stage_key=stage_key, refresh=refresh
     )
-    return _select_listings(raw)
+    return _select_by_name(raw, LISTINGS_RAW_SCHEMA, "listings")
 
 
 def read_reviews_csv(spark: SparkSession, path: str) -> DataFrame:
@@ -120,15 +121,7 @@ def read_reviews_csv(spark: SparkSession, path: str) -> DataFrame:
         .option("encoding", "ISO-8859-1")
         .csv(path)
     )
-    missing = [f.name for f in REVIEWS_RAW_SCHEMA.fields if f.name not in raw.columns]
-    if missing:
-        raise ValueError(f"reviews CSV lacks selected columns: {missing}")
-    return raw.select(
-        *[
-            F.col(f.name).try_cast(f.dataType).alias(f.name)
-            for f in REVIEWS_RAW_SCHEMA.fields
-        ]
-    )
+    return _select_by_name(raw, REVIEWS_RAW_SCHEMA, "reviews")
 
 
 def parse_money(col: str) -> F.Column:
@@ -223,10 +216,12 @@ def build_listing_docs(clean: DataFrame) -> DataFrame:
 
 def clean_reviews(df: DataFrame) -> DataFrame:
     """proccess_reviews + the load-side casts (Airbnb_Review_ETL.py:30-86):
-    select 5 -> full-row dedup -> lenient listing_id cast -> drop nulls."""
+    select 5 -> lenient listing_id cast -> drop nulls. The reference's
+    full-row dedup is left to :func:`reviews_to_arrays`, whose
+    ``array_distinct`` gives set semantics per listing after the cast
+    (so ``"01"`` and ``"1"`` rows collapse too) without a second shuffle."""
     return (
         df.select("listing_id", "date", "reviewer_id", "reviewer_name", "comments")
-        .dropDuplicates()
         .withColumn("listing_id", F.col("listing_id").try_cast("long"))
         .na.drop()
     )
@@ -265,14 +260,19 @@ def run_listings_etl(
     `retries=1` scenario, Airbnb_Listings_ETL.py:219-220) leaves every
     already-published sink complete and every untouched sink at its
     previous version — the retry re-runs the whole job and converges
-    (tests/test_airbnb_pipeline.py::test_listings_etl_retry_converges)."""
+    (tests/test_airbnb_pipeline.py::test_listings_etl_retry_converges).
+
+    The cleaned-frame cache is released once the sinks are published (or
+    the fan-out fails), so the returned frames are lazy lineages over the
+    CSV again; read the published tables for repeated use."""
     clean = clean_listings(read_listings_csv(spark, csv_path)).cache()
-    tables = split_tables(clean)
-    for name, t in tables.items():
-        publish_parquet(t, f"{out_dir}/{name}")
-    docs = build_listing_docs(clean)
-    publish_parquet(docs, f"{out_dir}/listings_docs")
-    tables["listings_docs"] = docs
+    try:
+        tables = split_tables(clean)
+        tables["listings_docs"] = build_listing_docs(clean)
+        for name, t in tables.items():
+            publish_parquet(t, f"{out_dir}/{name}")
+    finally:
+        clean.unpersist()
     return tables
 
 
@@ -295,8 +295,3 @@ def run_reviews_etl(
     publish_parquet(merged, target)
     return read_published(spark, target)
 
-
-def upsert_table(base: DataFrame, updates: DataFrame) -> DataFrame:
-    """Row-level upsert keyed on id (insert_rows(upsert=True),
-    Airbnb_Listings_ETL.py:143-151) — set-oriented, one shuffle."""
-    return upsert_snapshot(base, updates, keys=["id"])

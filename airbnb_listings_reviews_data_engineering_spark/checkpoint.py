@@ -1,30 +1,22 @@
-"""Lineage pinning (materialize-once) with a deployment-selectable
-durability mode.
+"""Lineage pinning (materialize-once) with durability taken from Spark.
 
 Iterative operators (connected components, k-means label propagation),
 self-joins over a computed signature (MinHash / SimHash / shingle sets),
 and the Bloom-join reorder barrier all need to cut lineage and/or
-materialize an intermediate exactly once. Three physical strategies
-exist, with different durability:
+materialize an intermediate exactly once. ``pin`` picks one of Spark's
+two checkpoint primitives from the SparkContext itself, the way the host
+engine's own lineage/checkpoint mechanism is meant to provide fault
+tolerance:
 
-- ``local`` (default): ``DataFrame.localCheckpoint`` — blocks live on
-  executors. Fastest, zero external IO; NOT fault-tolerant: losing one
-  executor mid-job kills the job unrecoverably (truncated lineage has no
-  recompute path). Right for local/dev runs and short jobs where a retry
-  is cheaper than durable IO.
-- ``reliable``: ``DataFrame.checkpoint`` to the session's checkpoint
-  directory (HDFS/S3/dist-FS on a cluster) — survives executor loss.
-  The 1000-executor / 100 TB posture for iterative jobs whose wall-clock
-  exceeds the executor MTBF.
-- ``parquet``: stage the DataFrame as parquet under the configurable
-  staging root (sources/staging.py) and read it back — durable AND keeps
-  columnar scans + column pruning for downstream consumers; the only
-  mode whose artifact can outlive the driver JVM.
-
-Mode selection (first match wins):
-  1. Spark conf ``spark.airbnb.checkpoint.mode``
-  2. env ``SPARK_GRAFT_CHECKPOINT_MODE``
-  3. ``local``
+- no checkpoint directory set (the default): ``DataFrame.localCheckpoint``
+  — blocks live on executors. Fastest, zero external IO; NOT
+  fault-tolerant: losing one executor mid-job kills the job (truncated
+  lineage has no recompute path). Right for local/dev runs and short
+  jobs where a retry is cheaper than durable IO.
+- a checkpoint directory set (Spark's own ``spark.checkpoint.dir`` conf
+  or ``sc.setCheckpointDir``, e.g. on HDFS/S3): ``DataFrame.checkpoint``
+  — survives executor loss. The posture for iterative jobs whose
+  wall-clock exceeds the executor MTBF.
 
 Every pin is tracked per-session so harnesses can free executor storage
 between queries (``release_pins``) — repeated invocations in one session
@@ -37,17 +29,9 @@ its lineage was truncated; release only after the result is consumed.
 
 from __future__ import annotations
 
-import os
-import uuid
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
-
-MODE_CONF = "spark.airbnb.checkpoint.mode"
-MODE_ENV = "SPARK_GRAFT_CHECKPOINT_MODE"
-RELIABLE_DIR_CONF = "spark.airbnb.checkpoint.dir"
-
-_MODES = ("local", "reliable", "parquet")
 
 # session JVM id -> list[(weakref to pinned DataFrame | None, release callable)]
 _PINS: dict[int, list[tuple[object, object]]] = {}
@@ -163,14 +147,6 @@ class small_pin_floor:
         return False
 
 
-def checkpoint_mode(spark: SparkSession) -> str:
-    mode = spark.conf.get(MODE_CONF, None) or os.environ.get(MODE_ENV, "local")
-    mode = mode.lower()
-    if mode not in _MODES:
-        raise ValueError(f"{MODE_CONF}={mode!r}; expected one of {_MODES}")
-    return mode
-
-
 def _session_key(spark: SparkSession) -> int:
     return id(spark.sparkContext)
 
@@ -179,13 +155,12 @@ def _track(spark: SparkSession, df: DataFrame, releaser) -> None:
     _PINS.setdefault(_session_key(spark), []).append((weakref.ref(df), releaser))
 
 
-def _local_releaser(df: DataFrame):
-    """Unpersist the executor blocks behind a localCheckpoint'ed (or
-    reliable-checkpointed) DataFrame. The analyzed plan of the DataFrame
-    returned by (local)checkpoint IS a LogicalRDD over the stored RDD;
-    unpersisting that RDD frees the blocks. Wrapped defensively: if the
-    internal shape ever changes, the fallback is today's behavior
-    (blocks freed when the RDD is GC'd)."""
+def _block_releaser(df: DataFrame):
+    """Unpersist the executor blocks behind a pinned DataFrame. The
+    analyzed plan of the DataFrame returned by (local)checkpoint IS a
+    LogicalRDD over the stored RDD; unpersisting that RDD frees the
+    blocks. Wrapped defensively: if the internal shape ever changes, the
+    fallback is today's behavior (blocks freed when the RDD is GC'd)."""
     jdf = df._jdf  # noqa: SLF001 — no public API exposes the pinned RDD
 
     def release() -> None:
@@ -198,13 +173,11 @@ def _local_releaser(df: DataFrame):
 
 
 def pin(df: DataFrame, *, eager: bool = True, label: str = "pin") -> DataFrame:
-    """Materialize ``df`` once and cut its lineage, using the
-    session-configured durability mode. ``eager=False`` keeps the
-    materialization lazy (first action triggers it) while still
-    truncating the logical plan — the Bloom-join reorder barrier; in
-    ``parquet`` mode a lazy stage is impossible (the write is an action)
-    so the stage happens eagerly, which preserves the barrier semantics.
-    """
+    """Materialize ``df`` once and cut its lineage: ``checkpoint`` when
+    the SparkContext has a checkpoint directory, else
+    ``localCheckpoint``. ``eager=False`` keeps the materialization lazy
+    (first action triggers it) while still truncating the logical plan —
+    the Bloom-join reorder barrier."""
     spark = df.sparkSession
     if _STAGE_RECORDING:
         try:
@@ -218,51 +191,26 @@ def pin(df: DataFrame, *, eager: bool = True, label: str = "pin") -> DataFrame:
                 (label, f"<capture failed: {e!r}>", 0)
             )
     if not _PIN_TIMING:
-        return _pin_impl(df, spark, eager, label)
+        return _pin_impl(df, spark, eager)
     import time
 
     t0 = time.perf_counter()
-    out = _pin_impl(df, spark, eager, label)
+    out = _pin_impl(df, spark, eager)
     _PIN_TIMES.setdefault(_session_key(spark), []).append(
         (label, time.perf_counter() - t0)
     )
     return out
 
 
-def _pin_impl(
-    df: DataFrame, spark: SparkSession, eager: bool, label: str
-) -> DataFrame:
-    mode = checkpoint_mode(spark)
-    if mode == "local":
+def _pin_impl(df: DataFrame, spark: SparkSession, eager: bool) -> DataFrame:
+    if spark.sparkContext.getCheckpointDir() is None:
         out = df.localCheckpoint(eager=eager)
-        _track(spark, out, _local_releaser(out))
-        return out
-    if mode == "reliable":
-        sc = spark.sparkContext
-        if sc._jsc.sc().checkpointDir().isEmpty():  # noqa: SLF001
-            root = spark.conf.get(RELIABLE_DIR_CONF, None)
-            if root is None:
-                from .sources.staging import staging_root
-
-                root = os.path.join(staging_root(spark), "_checkpoints")
-            sc.setCheckpointDir(root)
+    else:
         out = df.checkpoint(eager=eager)
-        # blocks also land in executor storage (checkpoint persists
-        # before writing); free them the same way — the durable files
-        # remain the recompute path.
-        _track(spark, out, _local_releaser(out))
-        return out
-    # parquet
-    from .sources.staging import fs_delete, staging_root
-
-    path = os.path.join(
-        staging_root(spark), "_pins", f"{label}_{uuid.uuid4().hex[:12]}"
-    )
-    df.write.mode("overwrite").parquet(path)
-    out = spark.read.parquet(path)
-    # fs_delete, not rmtree: with a dist-FS staging root (hdfs://,
-    # s3a://) rmtree silently never frees the staged pin (ADVICE r3)
-    _track(spark, out, lambda: fs_delete(path, spark))
+    # a reliable checkpoint also persists blocks in executor storage
+    # before writing; free them the same way — the durable files remain
+    # the recompute path.
+    _track(spark, out, _block_releaser(out))
     return out
 
 

@@ -8,7 +8,7 @@ Greenwald-Khanna sketch) bounds state at ~O(accuracy) per group and
 merges map-side, but trades exactness for a rank error <= n/accuracy.
 
 ``guarded_percentile`` makes the switch automatic: a cheap probe asks
-"does ANY group hold more than ``maxExactGroupRows`` values?" and picks
+"does ANY group hold more than ``threshold`` values?" and picks
 the exact aggregate only when the answer is no. The verdict comes from
 TABLE STATISTICS first (``parquet_max_group_bound``: an interval-
 stabbing sweep over per-row-group min/max footer stats — a pure
@@ -22,10 +22,10 @@ aggregate is visible in the physical plan (``percentile`` vs
 ``approx_percentile`` in the Aggregate node), which is what
 tests/test_plan_quality.py pins.
 
-Threshold conf: ``spark.airbnb.percentile.maxExactGroupRows`` (default
-10,000,000 — roughly the point where one group's buffered doubles start
-to crowd a 4 GiB executor heap share; see plans/approx_ext.py for the
-documented crossover rule).
+Budget: ``DEFAULT_MAX_EXACT_GROUP_ROWS`` (10,000,000 — roughly the point
+where one group's buffered doubles start to crowd a 4 GiB executor heap
+share; see plans/approx_ext.py for the documented crossover rule).
+Callers that need another budget pass ``threshold=``.
 """
 
 from __future__ import annotations
@@ -33,7 +33,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-GUARD_CONF = "spark.airbnb.percentile.maxExactGroupRows"
 DEFAULT_MAX_EXACT_GROUP_ROWS = 10_000_000
 
 # (cache_key, threshold) -> probe verdict. When ``stats_path`` is given
@@ -124,7 +123,7 @@ def exact_fits(
     df: DataFrame,
     group_cols: list[str],
     value_col: str,
-    threshold: int | None = None,
+    threshold: int = DEFAULT_MAX_EXACT_GROUP_ROWS,
     cache_key: tuple | None = None,
     stats_path: str | None = None,
     stats_group_col: str | None = None,
@@ -139,12 +138,6 @@ def exact_fits(
     The probe itself never buffers values and never collects a result
     set. ``cache_key`` memoizes the verdict; with ``stats_path`` the key
     carries a freshness stamp so regenerated data re-probes."""
-    if threshold is None:
-        threshold = int(
-            df.sparkSession.conf.get(
-                GUARD_CONF, str(DEFAULT_MAX_EXACT_GROUP_ROWS)
-            )
-        )
     if cache_key is not None and stats_path is not None:
         cache_key = (*cache_key, _freshness(stats_path))
     memo = (cache_key, threshold) if cache_key is not None else None
@@ -183,7 +176,7 @@ def guarded_percentile(
     group_cols: list[str],
     value_col: str,
     quantiles: dict[str, float],
-    threshold: int | None = None,
+    threshold: int = DEFAULT_MAX_EXACT_GROUP_ROWS,
     accuracy: int = 10000,
     decimals: int = 4,
     exact: bool | None = None,

@@ -793,8 +793,8 @@ def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference: Airbnb_Analysis.py:89. The exact/approx choice is
     AUTOMATIC (functions/percentile.py): a count-only probe checks
-    whether any group exceeds ``spark.airbnb.percentile
-    .maxExactGroupRows``; within budget -> exact ``percentile`` (the
+    whether any group exceeds ``DEFAULT_MAX_EXACT_GROUP_ROWS``; within
+    budget -> exact ``percentile`` (the
     oracle hash-match needs exactness, and gate SF is far inside the
     budget); beyond it -> ``approx_percentile`` with the documented
     n/accuracy rank bound (plans/approx_ext.py), whose bounded

@@ -225,14 +225,14 @@ def pack_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The cumsum runs on the LIVE range-shuffled frame (narrow, order
     # preserved by sortWithinPartitions), and what gets pinned is its
-    # OUTPUT, with pid and local_cum baked in as data columns. Pinning
-    # the ranged input instead (the pre-r13 shape) was wrong in
-    # `parquet` checkpoint mode: the staged files are re-read under
-    # Spark's bin-packing, so one read partition could concatenate
-    # several original pids and the `seen` carry double-counted across
-    # the boundary (ADVICE r12). Downstream of this pin only layout-
-    # independent ops (groupBy pid, broadcast join) remain; the pin is
-    # still shared by the totals job and the shard aggregation.
+    # OUTPUT, with pid and local_cum baked in as data columns, so the
+    # result never depends on how a materialized copy is partitioned:
+    # pinning the ranged input instead (the pre-r13 shape) let a re-read
+    # that bin-packs partitions concatenate several pids and the `seen`
+    # carry double-count across the boundary (ADVICE r12). Downstream of
+    # this pin only layout-independent ops (groupBy pid, broadcast join)
+    # remain; the pin is still shared by the totals job and the shard
+    # aggregation.
     local = pin(
         d.mapInPandas(
             cumsum_local, schema="pid int, n_tok int, local_cum long"
@@ -1755,10 +1755,10 @@ def pipeline_training_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield out
 
     # Cumsum on the LIVE ranged frame, pin the OUTPUT (pid + local_cum
-    # as data columns) — pinning the ranged input was layout-dependent
-    # in parquet checkpoint mode, where re-read bin-packing can merge
-    # pids in one read partition and the `seen` carry then crosses pid
-    # boundaries (ADVICE r12; same fix as pack_token_shards).
+    # as data columns) — pinning the ranged input was layout-dependent:
+    # a re-read that bin-packs partitions can merge pids in one
+    # partition and the `seen` carry then crosses pid boundaries
+    # (ADVICE r12; same fix as pack_token_shards).
     local = pin(
         d.mapInPandas(
             cumsum_local,

@@ -21,9 +21,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    ``cpus`` defaults to $SPARK_GRAFT_CPUS or all local cores. On a real
-    cluster the ``master`` is supplied externally; local[] is only the
-    test harness.
+    ``cpus`` defaults to $SPARK_GRAFT_CPUS or all local cores; the master
+    is always ``local[cpus]``. The driver heap is $SPARK_GRAFT_DRIVER_MEM
+    (default 16g).
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     shuffle_partitions = shuffle_partitions or max(cpus, 4)
@@ -44,10 +44,7 @@ def get_spark(
         # shape that wants a lower floor (a small pinned frame whose
         # layout feeds many compute-heavy downstream passes) gets it
         # scoped via checkpoint.small_pin_floor instead.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # 16g: local mode puts every "executor" in the driver JVM; an 8g
@@ -58,12 +55,9 @@ def get_spark(
         # parquet files, so the cluster default (128m) leaves every scan
         # stage at parallelism 1 and serializes compute-heavy scans
         # (md5-per-shingle in the dedup family). 512k splits them across
-        # the 32 local cores; a real cluster reading 100 TB keeps the
-        # 128m default (set SPARK_GRAFT_MAX_PARTITION_BYTES).
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "512k"),
-        )
+        # the local cores. get_spark always builds a local[] master, so
+        # this is a harness constant, not a cluster setting.
+        .config("spark.sql.files.maxPartitionBytes", "512k")
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()

@@ -1,7 +1,7 @@
 """Configurable staging root for intermediate/exchange artifacts.
 
-CSV sinks, XCom-style transfer staging, splittable-CSV re-chunking and
-parquet-mode checkpoint pins all write intermediates somewhere. Locally
+CSV sinks, XCom-style transfer staging and splittable-CSV re-chunking
+all write intermediates somewhere. Locally
 that is the system tempdir; on a cluster every executor must see the
 same path, so the root has to be a dist-FS location (HDFS/S3/NFS).
 

@@ -15,6 +15,9 @@ from airbnb_listings_reviews_data_engineering_spark.session import get_spark  # 
 def spark():
     s = get_spark(app_name="pytest", cpus=4, shuffle_partitions=4)
     yield s
+    # a test that sets a checkpoint dir must unset it: with one set, every
+    # later pin() in the shared session would write reliable checkpoints
+    assert s.sparkContext.getCheckpointDir() is None
 
 
 @pytest.fixture(scope="session")

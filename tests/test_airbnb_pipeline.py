@@ -142,10 +142,37 @@ def review_arrays(spark):
     return etl.reviews_to_arrays(etl.clean_reviews(df))
 
 
-def test_reviews_clean_and_group(review_arrays):
-    rows = {r.listing_id: r.reviews for r in review_arrays.collect()}
-    assert set(rows) == {1, 2, 3}  # 'junk' row dropped
-    assert len(rows[1]) == 1  # exact dup removed
+# reviews_to_arrays output for REVIEW_ROWS (and for the duplicate-laden
+# variant below): set semantics per listing, listing_id cast to long
+REVIEW_ARRAYS = {
+    1: [("2024-01-01", 100, "Ana", "So quiet and lovely")],
+    2: [("2024-01-02", 101, "Bo", "automated posting: canceled 5 days before")],
+    3: [("2024-01-04", 103, "Di", "great park views")],
+}
+
+
+def _arrays(df):
+    return {
+        r.listing_id: [tuple(x) for x in r.reviews] for r in df.collect()
+    }
+
+
+def test_reviews_clean_and_group(spark, review_arrays):
+    # 'junk' row dropped, exact dup removed
+    assert _arrays(review_arrays) == REVIEW_ARRAYS
+    # more exact duplicates, and ids that differ as strings but not as
+    # longs ("01" vs "1"): same arrays
+    noisy = spark.createDataFrame(
+        REVIEW_ROWS
+        + [
+            ("01", "2024-01-01", 100, "Ana", "So quiet and lovely"),
+            ("1", "2024-01-01", 100, "Ana", "So quiet and lovely"),
+            ("3", "2024-01-04", 103, "Di", "great park views"),
+            ("003", "2024-01-04", 103, "Di", "great park views"),
+        ],
+        "listing_id string, date string, reviewer_id long, reviewer_name string, comments string",
+    )
+    assert _arrays(etl.reviews_to_arrays(etl.clean_reviews(noisy))) == REVIEW_ARRAYS
 
 
 def test_addtoset_merge_idempotent(review_arrays):

@@ -1,8 +1,10 @@
 """Durable-checkpoint helper (checkpoint.pin) and staging-root config.
 
-Covers the three durability modes, the release/release_pins storage
-cleanup (ADVICE r2: repeated invocations must not accumulate executor
-storage), and that iterative operators still converge under each mode.
+Covers the two pin paths — ``localCheckpoint`` with no SparkContext
+checkpoint directory, ``checkpoint`` with one — the release/release_pins
+storage cleanup (ADVICE r2: repeated invocations must not accumulate
+executor storage), and that iterative operators still converge on each
+path.
 """
 
 from __future__ import annotations
@@ -13,8 +15,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from airbnb_listings_reviews_data_engineering_spark.checkpoint import (
-    MODE_CONF,
-    checkpoint_mode,
     pin,
     release,
     release_pins,
@@ -29,30 +29,65 @@ from airbnb_listings_reviews_data_engineering_spark.sources.staging import (
 )
 
 
+def _clear_checkpoint_dir(spark) -> None:
+    """Unset the SparkContext checkpoint dir (PySpark has no public
+    unsetter), so later tests in the shared session pin locally."""
+    sc = spark.sparkContext
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
+
+
 @pytest.fixture()
-def mode_conf(spark):
+def fresh_pins(spark):
     """Drain pins left by earlier test modules (storage accounting here
-    must start from a clean slate) and restore the mode conf after."""
+    must start from a clean slate); drain again and leave no checkpoint
+    dir behind afterwards."""
     release_pins(spark)
     yield
-    spark.conf.unset(MODE_CONF)
     release_pins(spark)
+    _clear_checkpoint_dir(spark)
+
+
+@pytest.fixture()
+def checkpoint_dir(spark, fresh_pins, tmp_path):
+    """A SparkContext checkpoint dir for one test (what a deployment sets
+    through ``spark.checkpoint.dir`` or ``sc.setCheckpointDir``)."""
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    return tmp_path / "ckpt"
 
 
 def _stored_rdd_count(spark) -> int:
     return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
 
 
-def test_local_mode_pins_and_releases(spark, mode_conf):
+def _checkpoint_file(df) -> str | None:
+    """The durable checkpoint path behind a pinned frame, if any."""
+    f = df._jdf.queryExecution().analyzed().rdd().getCheckpointFile()
+    return f.get() if f.isDefined() else None
+
+
+def _part_files(root) -> list[str]:
+    return [
+        os.path.join(d, f)
+        for d, _sub, fs in os.walk(root)
+        for f in fs
+        if f.startswith("part-")
+    ]
+
+
+def test_local_mode_pins_and_releases(spark, fresh_pins):
+    """No checkpoint dir (the shared session's state): pins are
+    localCheckpoints — executor blocks only, nothing on disk."""
+    assert spark.sparkContext.getCheckpointDir() is None
     before = _stored_rdd_count(spark)
     df = pin(spark.range(1000).withColumn("v", F.col("id") * 2))
     assert df.count() == 1000
+    assert _checkpoint_file(df) is None  # localCheckpoint: no durable copy
     assert _stored_rdd_count(spark) > before
     assert release_pins(spark) >= 1
     assert _stored_rdd_count(spark) == before
 
 
-def test_release_single_pin(spark, mode_conf):
+def test_release_single_pin(spark, fresh_pins):
     before = _stored_rdd_count(spark)
     a = pin(spark.range(10))
     b = pin(spark.range(20))
@@ -64,68 +99,33 @@ def test_release_single_pin(spark, mode_conf):
     assert _stored_rdd_count(spark) == before
 
 
-def test_reliable_mode_writes_checkpoint_files(spark, mode_conf, tmp_path):
-    spark.conf.set(MODE_CONF, "reliable")
-    assert checkpoint_mode(spark) == "reliable"
-    sc = spark.sparkContext
-    if sc._jsc.sc().checkpointDir().isEmpty():
-        sc.setCheckpointDir(str(tmp_path / "ckpt"))
+def test_reliable_mode_writes_checkpoint_files(spark, checkpoint_dir):
+    """A checkpoint dir set: pins are reliable checkpoints that write
+    part- files under it."""
     df = pin(spark.range(500).withColumn("v", F.col("id") + 1))
     assert df.count() == 500
-    ckpt_root = sc._jsc.sc().checkpointDir().get().replace("file:", "")
-    files = [
-        os.path.join(d, f)
-        for d, _sub, fs in os.walk(ckpt_root)
-        for f in fs
-        if f.startswith("part-")
-    ]
-    assert files, "reliable mode must write checkpoint part files"
+    assert str(checkpoint_dir) in _checkpoint_file(df)
+    assert _part_files(checkpoint_dir), "pin must write checkpoint part files"
     # releasing only drops executor blocks; durable files remain the
     # recompute path, so the frame stays usable
     release_pins(spark)
     assert df.count() == 500
 
 
-def test_parquet_mode_stages_and_cleans(spark, mode_conf, tmp_path):
-    spark.conf.set(MODE_CONF, "parquet")
-    spark.conf.set(ROOT_CONF, str(tmp_path))
-    try:
-        df = pin(spark.range(100).withColumn("v", F.col("id") % 7), label="t")
-        assert df.count() == 100
-        pins_dir = tmp_path / "_pins"
-        assert any(pins_dir.iterdir())
-        release_pins(spark)
-        assert not any(pins_dir.iterdir())
-    finally:
-        spark.conf.unset(ROOT_CONF)
-
-
-def test_bad_mode_raises(spark, mode_conf):
-    spark.conf.set(MODE_CONF, "bogus")
-    with pytest.raises(ValueError, match="bogus"):
-        pin(spark.range(1))
-
-
-@pytest.mark.parametrize("mode", ["local", "reliable", "parquet"])
-def test_connected_components_under_each_mode(spark, mode_conf, tmp_path, mode):
-    spark.conf.set(MODE_CONF, mode)
-    if mode == "parquet":
-        spark.conf.set(ROOT_CONF, str(tmp_path))
-    if mode == "reliable" and spark.sparkContext._jsc.sc().checkpointDir().isEmpty():
+@pytest.mark.parametrize("mode", ["local", "reliable"])
+def test_connected_components_under_each_mode(spark, fresh_pins, tmp_path, mode):
+    if mode == "reliable":
         spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    try:
-        # path graph 1-2-3-4 plus isolated pair 9-10: two components
-        pairs = spark.createDataFrame(
-            [(1, 2), (2, 3), (3, 4), (9, 10)], "doc_a long, doc_b long"
-        )
-        got = {
-            (r.node, r.component)
-            for r in connected_components(pairs).collect()
-        }
-        assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (9, 9), (10, 9)}
-    finally:
-        if mode == "parquet":
-            spark.conf.unset(ROOT_CONF)
+    # path graph 1-2-3-4 plus isolated pair 9-10: two components
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (9, 10)], "doc_a long, doc_b long"
+    )
+    got = {
+        (r.node, r.component)
+        for r in connected_components(pairs).collect()
+    }
+    assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (9, 9), (10, 9)}
+    assert bool(_part_files(tmp_path)) == (mode == "reliable")
 
 
 def test_staging_root_conf_override(spark, tmp_path):
